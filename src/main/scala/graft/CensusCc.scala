@@ -23,8 +23,7 @@ import org.apache.spark.sql.functions._
 object CensusCc {
   def main(args: Array[String]): Unit = {
     val sfDir = args.headOption.getOrElse("/root/testdata/sf0.1")
-    val spark = graft.engine.Graft.session("graft-census-cc",
-      defaultCpus = "32")
+    val spark = graft.engine.Graft.session("graft-census-cc")
     spark.sparkContext.setLogLevel("ERROR")
     import graft.queries.{DedupQueries, Scratch}
     val sigs = DedupQueries.simhashSigs(spark, sfDir)

@@ -61,7 +61,7 @@ object CensusData {
     val out = args.lift(1).getOrElse("/tmp/graft_census_sf1")
     val copies = args.lift(2).flatMap(_.toIntOption).getOrElse(10)
     val tables = args.lift(3).map(_.split(",").map(_.trim).toSet)
-    val spark = graft.engine.Graft.session("graft-census", defaultCpus = "32")
+    val spark = graft.engine.Graft.session("graft-census")
     try build(spark, src, out, copies, tables) finally spark.stop()
   }
 

@@ -16,8 +16,7 @@ object CensusReleaseParts {
   def main(args: Array[String]): Unit = {
     val sfDir = args.lift(0).getOrElse("/root/testdata/sf0.1")
     val reps = args.lift(1).flatMap(_.toIntOption).getOrElse(2)
-    val spark = graft.engine.Graft.session("graft-census-release-parts",
-      defaultCpus = "32")
+    val spark = graft.engine.Graft.session("graft-census-release-parts")
     spark.sparkContext.setLogLevel("ERROR")
     def noop(df: DataFrame): Unit =
       df.write.format("noop").mode("overwrite").save()

@@ -30,8 +30,7 @@ object CensusSemDedup {
     val k = args.lift(1).flatMap(_.toIntOption).getOrElse(8)
     val iters = args.lift(2).flatMap(_.toIntOption).getOrElse(2)
     val reps = args.lift(3).flatMap(_.toIntOption).getOrElse(3)
-    val spark = graft.engine.Graft.session("graft-census-semdedup",
-      defaultCpus = "32")
+    val spark = graft.engine.Graft.session("graft-census-semdedup")
     spark.sparkContext.setLogLevel("ERROR")
     // Pay the corpus scan/footer outside the timer (the Bench warmup
     // discipline), so the leg times the algorithm, not the open cost.

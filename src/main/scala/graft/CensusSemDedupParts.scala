@@ -16,8 +16,7 @@ object CensusSemDedupParts {
     val sfDir = args.lift(0).getOrElse("/tmp/graft_census_sf10")
     val k = args.lift(1).flatMap(_.toIntOption).getOrElse(800)
     val alsoFlat = args.lift(2).contains("flat")
-    val spark = graft.engine.Graft.session("graft-census-semdedup-parts",
-      defaultCpus = "32")
+    val spark = graft.engine.Graft.session("graft-census-semdedup-parts")
     spark.sparkContext.setLogLevel("ERROR")
     graft.engine.Graft.table(spark, sfDir, "embeddings").count(): Unit
     def tick[T](name: String)(f: => T): T = {

@@ -21,9 +21,14 @@ object Graft {
     * through here so the config contract can't drift between entry
     * points (a missing `nanosAsLong` in one main once broke only the
     * paths that read `events`). `extraConf` is for per-main additions
-    * (e.g. Plans disables size-based auto-broadcast).
+    * (e.g. Plans disables size-based auto-broadcast). Thread count:
+    * `SPARK_GRAFT_CPUS`, else `defaultCpus`, which follows the host's
+    * cores unless a main pins it (Plans/PlanDump do, because their
+    * plan text embeds partition counts).
     */
-  def session(appName: String = "graft", defaultCpus: String = "32",
+  def session(appName: String = "graft",
+              defaultCpus: String =
+                Runtime.getRuntime.availableProcessors.toString,
               extraConf: Map[String, String] = Map.empty): SparkSession = {
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", defaultCpus)
     // Shuffle partitions default to the thread count, but are
@@ -61,15 +66,11 @@ object Graft {
     * normalization rides inside the memoized frame.
     */
   def table(spark: SparkSession, dir: String, name: String): DataFrame =
-    tableMemo.computeIfAbsent(
-      s"${spark.sparkContext.applicationId}:$dir:$name",
-      _ =>
-        if (name == "events") normalizeTs(
-          spark.read.parquet(s"$dir/events.parquet"))
-        else spark.read.parquet(s"$dir/$name.parquet"))
-
-  private val tableMemo =
-    new java.util.concurrent.ConcurrentHashMap[String, DataFrame]()
+    SessionMemo(spark, "table", s"$dir:$name") {
+      if (name == "events") normalizeTs(
+        spark.read.parquet(s"$dir/events.parquet"))
+      else spark.read.parquet(s"$dir/$name.parquet")
+    }
 
   /** Normalize `ts` to session TimestampType regardless of the physical
     * form it arrived in. Event-log producers drift: the same logical

@@ -3,7 +3,7 @@ package graft.queries
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.storage.StorageLevel
-import graft.engine.{Functions, Graft}
+import graft.engine.{Functions, Graft, SessionMemo}
 
 /** Deduplication operators for a training-data pipeline over the
   * `documents` / `embeddings` tables: exact (hash-groupBy), n-gram
@@ -257,12 +257,10 @@ object DedupQueries {
     */
   private[graft] def bloomStatics(s: SparkSession,
                                   d: String): (Long, DataFrame, DataFrame) = {
-    val m = bloomMemoM.computeIfAbsent(
-      s"${s.sparkContext.applicationId}:$d", _ => {
-        val n = evalGramIndex(s, d).filter(col("split") =!= "train")
-          .select(col("h")).distinct().count()
-        java.lang.Long.valueOf(Bloom.sizeM(n))
-      }).longValue()
+    val m = SessionMemo(s, "d16_m", d) {
+      Bloom.sizeM(evalGramIndex(s, d).filter(col("split") =!= "train")
+        .select(col("h")).distinct().count())
+    }
     val bits = Scratch.memoized(s, s"d16_bits:$d", "d16_bits",
       Bloom.bitsOf(evalGramIndex(s, d).filter(col("split") =!= "train")
         .select(col("h")).distinct(), m))
@@ -271,8 +269,6 @@ object DedupQueries {
         .select(col("h"), col("gram")).distinct())
     (m, bits, evG)
   }
-  private val bloomMemoM =
-    new java.util.concurrent.ConcurrentHashMap[String, java.lang.Long]()
 
   /** Shared oracle of d16 (batch) and d16s (stream): the full
     * Bloom-prefiltered decontamination differential as one DuckDB CTE

@@ -1,5 +1,6 @@
 package graft.queries
 
+import graft.engine.{Catalog, SessionMemo}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
 /** One oracle-checked query: a Spark implementation plus (when the
@@ -73,9 +74,6 @@ object Scratch {
     if (n <= 1) back else back.repartition(n)
   }
 
-  private val memo =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
-
   // Mutable warehouse roots are tracked by the engine layer (every
   // Catalog registers its warehouse at construction); memoized()
   // consults that registry so the immutability guard holds for
@@ -88,8 +86,7 @@ object Scratch {
     * d7) — the warehouse shape at 100 TB, where a signature index is
     * built once per corpus, not once per consumer. Keys must encode
     * every input the frame depends on (callers embed the sf dir);
-    * scratch roots are per-applicationId, so keys never outlive or
-    * cross sessions.
+    * memo policy and lifetime are [[graft.engine.SessionMemo]]'s.
     *
     * CONTRACT: the input directory named in the key must be immutable
     * for the session — the key encodes the PATH, not the contents, so
@@ -111,22 +108,32 @@ object Scratch {
       s"Scratch.memoized: key '$key' references a scratch or warehouse " +
         "path, which is mutable by definition — memo keys must name " +
         "immutable inputs; use materialize/fresh instead")
-    val fullKey = s"${s.sparkContext.applicationId}:$key"
-    // Build OUTSIDE any map lock: memoized frames nest (the LSH
-    // candidate table forces the shingle table), and a nested
-    // computeIfAbsent on one ConcurrentHashMap is a forbidden
-    // "recursive update" — it happens to work or throw depending on
-    // which hash bins the keys land in (it threw for the sf0.1 key
-    // strings and worked for sf0.01's). Racing duplicate builds are
-    // benign: each writes its own fresh dir; putIfAbsent keeps the
-    // first and the loser's dir is just unused scratch.
-    val path = Option(memo.get(fullKey)).getOrElse {
+    val path = SessionMemo(s, "scratch", key) {
       val p = fresh(s, name)
       df.write.mode("overwrite").parquet(p)
-      Option(memo.putIfAbsent(fullKey, p)).getOrElse(p)
+      p
     }
     s.read.parquet(path)
   }
+
+  /** The ingest-built warehouse `kind` over the immutable input dir
+    * `d`: a fresh [[Catalog]] that `drive` fills, built once per
+    * (session, kind, dir) through [[graft.engine.SessionMemo]] and
+    * returned to every later caller. Production pays such a drive once
+    * per arriving batch at ingest and every query-time consumer reads
+    * the committed tables, so the bench pre-builds these in warmup and
+    * reports each drive under `ingest_artifacts`; the consuming row
+    * measures the read alone. The Catalog instance is what is memoized:
+    * warehouses are single-writer per process, so reopening the path
+    * would throw.
+    */
+  def warehouse(s: SparkSession, kind: String, d: String)(
+      drive: Catalog => Unit): Catalog =
+    SessionMemo(s, s"${kind}_wh", d) {
+      val cat = new Catalog(s, fresh(s, s"${kind}_wh"))
+      drive(cat)
+      cat
+    }
 }
 
 /** THE deterministic 80/10/10 train/val/test hash split — one

@@ -75,11 +75,9 @@ object EventsStream {
     * even started (r19 — the streaming rows are fixed-overhead-bound
     * at bench scale, measured flat from sf0.001 to sf0.1).
     */
-  private val rowsMemo =
-    new java.util.concurrent.ConcurrentHashMap[String, java.lang.Long]()
   private def eventRows(spark: SparkSession, dir: String): Long =
-    rowsMemo.computeIfAbsent(s"${spark.sparkContext.applicationId}:$dir",
-      _ => spark.read.parquet(s"$dir/events.parquet").count()).longValue()
+    graft.engine.SessionMemo(spark, "event_rows", dir)(
+      spark.read.parquet(s"$dir/events.parquet").count())
 
   /** Streaming source over the events parquet, normalized through the
     * SAME type-tolerant reader as the batch side
